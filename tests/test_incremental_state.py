@@ -69,6 +69,24 @@ def test_incremental_persisted_phase2_reads_state_not_corpus(spark, tmp_path):
     assert not any("old_corpus.parquet" in f for f in scanned)
 
 
+def test_incr_build_state_surfaces_both_failures(spark, tmp_path, monkeypatch):
+    """When the doc_sets/bands chain fails while the concurrent text_hashes
+    write fails too, neither error is lost: the text_hashes error is raised
+    with the chain's error chained on as its context."""
+    import vena_etl_tool_spark.operators.dedup as dedup
+
+    def broken_chain(_docs):
+        raise RuntimeError("band chain failed")
+
+    monkeypatch.setattr(dedup, "_minhash_per_doc", broken_chain)
+    no_text = spark.createDataFrame([(1, "a")], "doc_id long, source string")
+    with pytest.raises(Exception) as ei:
+        dedup.incr_build_state(no_text, str(tmp_path / "state"))
+    errors = [ei.value, ei.value.__context__]
+    assert any(isinstance(e, RuntimeError) and "band chain failed" in str(e) for e in errors)
+    assert any("text" in str(e) and not isinstance(e, RuntimeError) for e in errors)
+
+
 # float32 values in a sane embedding range (finite, |x| <= 16)
 _f32 = st.floats(
     min_value=-16.0, max_value=16.0, allow_nan=False, width=32
@@ -82,9 +100,11 @@ def test_scaled_long_fold_numpy_matches_scalar_reference(vec):
     per-element scalar math exactly — floor((x_i * p_i) * 1e12) as int64,
     summed — for any float32 input. This is the property that makes the
     DuckDB oracle bit-exact."""
+    from vena_etl_tool_spark.operators.exact import np_dot_scaled
+
     probe = np.arange(64, dtype=np.float64) / 64.0
     e = np.asarray(vec, dtype=np.float32).astype(np.float64)
-    vectorized = int(np.floor((e * probe) * 1e12).astype(np.int64).sum())
+    vectorized = int(np_dot_scaled(e, probe))
     scalar = sum(
         int(math.floor((float(x) * (i / 64.0)) * 1e12))
         for i, x in enumerate(e.tolist())

@@ -46,8 +46,45 @@ def test_ingest_quarantine_split(spark, csv_fixture):
     assert res.n_good == 200
     assert res.n_quarantined == 3
     assert res.good.schema.fieldNames()[:2] == ["l_orderkey", "l_partkey"]
-    quarantined = [r.raw_record for r in res.quarantine.collect()]
-    assert any("NOT_A_NUMBER" in r for r in quarantined)
+    assert "_source_file" not in res.good.columns
+    rows = res.quarantine.collect()
+    assert any("NOT_A_NUMBER" in r.raw_record for r in rows)
+    # provenance is captured inside the scan, below the cache
+    assert all(r.source_file.endswith("/lineitem.csv") for r in rows), rows
+    res.scan.unpersist(blocking=True)
+
+
+def _cached_csv_scans(spark) -> set[int]:
+    return {
+        i.id()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if "FileScan csv" in str(i.name())
+    }
+
+
+def test_cmd_upload_reupload_reads_new_content(tmp_path, spark, csv_fixture):
+    """A corrected file re-uploaded to the same path loads the new rows: the
+    upload's cached scan is released once its write job is done, so the
+    second ingest is not served the first file's cached rows."""
+    from vena_etl_tool_spark.pipeline.cli import cmd_upload
+    from vena_etl_tool_spark.pipeline.envconfig import EnvConfig
+
+    audit = AuditLog(str(tmp_path / "logs"))
+    jobs, specs = JobRegistry(spark, audit), default_registry()
+    target = f"{audit.log_dir}/../{specs.get('lineitem-csv').target}"
+    path = tmp_path / "upload.csv"
+    lines = open(csv_fixture).read().splitlines(keepends=True)
+    path.write_text("".join(lines))  # 200 good + 3 corrupt
+    cached_before = _cached_csv_scans(spark)  # other tests' scans
+    assert cmd_upload([str(path), "lineitem-csv"], spark, audit, jobs, specs, env_cfg=EnvConfig()) == 0
+    path.write_text("".join(lines[:151]))  # header + 150 clean rows
+    assert cmd_upload([str(path), "lineitem-csv"], spark, audit, jobs, specs, env_cfg=EnvConfig()) == 0
+
+    first, second = audit.read_channel("upload-history")[-2:]
+    assert (first["rowsLoaded"], first["rowsQuarantined"]) == (200, 3)
+    assert (second["rowsLoaded"], second["rowsQuarantined"]) == (150, 0)
+    assert spark.read.parquet(target).count() == 150
+    assert _cached_csv_scans(spark) == cached_before
 
 
 def test_spec_registry_validation():

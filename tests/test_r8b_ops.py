@@ -19,6 +19,7 @@ import pandas as pd
 import pytest
 
 from vena_etl_tool_spark.catalog import TABLES
+from vena_etl_tool_spark.operators.exact import with_sq_norm
 from vena_etl_tool_spark.operators.retrieval import (
     RRF_DEPTH,
     RRF_K,
@@ -30,7 +31,6 @@ from vena_etl_tool_spark.operators.retrieval import (
     retrieval_rrf_fusion,
     text_tfidf_cosine_pairs,
 )
-from vena_etl_tool_spark.operators.similarity import with_sq_norm
 from vena_etl_tool_spark.operators.textanalysis import text_bm25_search
 from vena_etl_tool_spark.registry import REGISTRY, all_specs
 from vena_etl_tool_spark.testing import diff_query, duckdb_connection

@@ -72,6 +72,7 @@ def test_ann_finds_planted_duplicate(spark, sf_dir):
     """A duplicated vector collides in every LSH band, so the ANN search
     must surface it as the top neighbor with cosine ≈ 1."""
     from vena_etl_tool_spark.operators import similarity as S
+    from vena_etl_tool_spark.operators.exact import with_sq_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     v0 = emb.filter("vec_id = 3").first()
@@ -80,7 +81,7 @@ def test_ann_finds_planted_duplicate(spark, sf_dir):
             [(99999, v0.embedding, v0.label)], "vec_id long, embedding array<float>, label int"
         )
     )
-    bucketed = S.with_sq_norm(planted).select(
+    bucketed = with_sq_norm(planted).select(
         "vec_id", "embedding", "sq_norm", *S.lsh_bucket_cols()
     )
     rows = {r.vec_id: [r[f"bucket{b}"] for b in range(S.LSH_BANDS)] for r in bucketed.collect()}

@@ -14,6 +14,7 @@ Module map (SURVEY.md §2 Part B):
 - udfs           §B.10 pandas UDF / applyInPandas / mapInPandas surface
 - dedup          §B.11 exact + MinHash-LSH + SimHash + n-gram Jaccard dedup
 - similarity     §B.11 cosine top-k / LSH ANN over embeddings
+- exact          the scaled-int64 dot every embedding operator shares
 - embeddings_eval §B.11 compression evals: binary-quantize + MRL recall
 - retrieval      §B.11 hybrid search: RRF fusion, TF-IDF similarity join
 - textanalysis   §B.11 lang-id, quality scoring, tokens, fingerprinting

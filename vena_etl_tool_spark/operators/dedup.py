@@ -28,6 +28,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import persisted_artifact, spread_small
+from .exact import (
+    duck_pair_dot,
+    duck_plane_dot,
+    duck_sq_norm,
+    np_dot_scaled,
+    np_unscale,
+    spark_plane_dot,
+)
 
 # Hot-shingle guard for the n-gram Jaccard blocking join: shingles shared
 # by more than this many documents are dropped before the self-join (a
@@ -694,27 +702,16 @@ def _emb_planes() -> "list[list[list[float]]]":
 _EMB_PLANES = _emb_planes()
 
 
-def _plane_sign_expr(emb_expr: str, plane: list[float]) -> str:
-    """SQL for the sign bit of <emb, plane>, via an order-insensitive
-    scaled-long fold (exact: identical result in any engine, no FP
-    merge-order hazard). Generated as a STRING, not composed Columns — a
-    48-plane × 64-coefficient tree built via the Column API costs tens of
-    thousands of py4j round trips (~5 s of driver time per plan); one
-    F.expr per band is ~free."""
-    lits = ", ".join(f"{float(v)!r}D" for v in plane)
-    return (
-        f"aggregate(zip_with({emb_expr}, array({lits}),"
-        f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, v) -> acc + v) > 0"
-    )
-
-
 def emb_bucket_cols(emb_expr: str = "embedding") -> list[Column]:
-    """One integer bucket id per band (6 sign bits each)."""
+    """One integer bucket id per band (6 sign bits each): the sign of the
+    exact scaled-long fold <emb, plane>. Generated as a STRING, not composed
+    Columns — a 48-plane × 64-coefficient tree built via the Column API
+    costs tens of thousands of py4j round trips (~5 s of driver time per
+    plan); one F.expr per band is ~free."""
     cols = []
     for band in range(EMB_LSH_BANDS):
         bits = " + ".join(
-            f"CASE WHEN {_plane_sign_expr(emb_expr, _EMB_PLANES[band][bit])}"
+            f"CASE WHEN {spark_plane_dot(emb_expr, _EMB_PLANES[band][bit])} > 0"
             f" THEN {1 << bit} ELSE 0 END"
             for bit in range(EMB_LSH_BITS)
         )
@@ -722,18 +719,9 @@ def emb_bucket_cols(emb_expr: str = "embedding") -> list[Column]:
     return cols
 
 
-def _sql_plane_sign(emb_expr: str, plane: list[float]) -> str:
-    lits = ", ".join(repr(float(v)) for v in plane)
-    return (
-        f"(SELECT SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        f" * struct_extract(p, 2) * 1e12) AS BIGINT))"
-        f" FROM UNNEST(list_zip({emb_expr}, [{lits}])) AS t(p)) > 0"
-    )
-
-
 def _sql_bucket(emb_expr: str, band: int) -> str:
     bits = [
-        f"CASE WHEN {_sql_plane_sign(emb_expr, _EMB_PLANES[band][bit])}"
+        f"CASE WHEN {duck_plane_dot(emb_expr, _EMB_PLANES[band][bit])} > 0"
         f" THEN {1 << bit} ELSE 0 END"
         for bit in range(EMB_LSH_BITS)
     ]
@@ -748,16 +736,11 @@ def _emb_cosine_oracle() -> str:
         f"  SELECT vec_id, {b} AS band, eb{b} AS bucket FROM norms"
         for b in range(EMB_LSH_BANDS)
     )
-    dot_ab = (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        " FROM UNNEST(list_zip(na.embedding, nb.embedding)) AS t(p))"
-    )
+    dot_ab = duck_pair_dot("na.embedding", "nb.embedding")
     return f"""
 WITH norms AS (
   SELECT vec_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {duck_sq_norm('embedding')} AS sq_norm,
          embedding,
          {buckets}
   FROM embeddings
@@ -797,7 +780,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Blocking is random-hyperplane LSH (8 bands × 6 sign bits): only pairs
     agreeing on at least one full band's bucket are scored. Both the bucket
     bits and the pairwise scores are Arrow-batched numpy over exactly the
-    engine-neutral scaled-long folds (``sum(floor(x*p*1e12))`` as int64) —
+    engine-neutral scaled-long folds (``exact.np_dot_scaled``) —
     IEEE doubles make floor/multiply bit-identical across numpy, Spark SQL,
     and DuckDB, so the oracle reproduces the *same blocking* and the same
     cosines bit-for-bit. Candidate pairs never materialize as Spark rows:
@@ -832,12 +815,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             for lo in range(0, len(pdf), 512):
                 e = np.stack(pdf["embedding"].iloc[lo : lo + 512].to_numpy())
                 e = e.astype(np.float64)  # CAST(float AS DOUBLE)
-                # identical association to the SQL fold: (x * p) * 1e12
-                sums = (
-                    np.floor((e[:, None, :] * planes[None, :, :]) * 1e12)
-                    .astype(np.int64)
-                    .sum(axis=2)
-                )
+                sums = np_dot_scaled(e[:, None, :], planes[None, :, :])
                 bits = (sums > 0).reshape(-1, EMB_LSH_BANDS, EMB_LSH_BITS)
                 chunks.append((bits * bit_weights[None, None, :]).sum(axis=2))
             buckets = np.concatenate(chunks)
@@ -887,14 +865,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         e = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        # exact pairwise scaled-long dots: floor((a*b)*1e12) summed as int64
-        dint = (
-            np.floor((e[:, None, :] * e[None, :, :]) * 1e12)
-            .astype(np.int64)
-            .sum(axis=2)
-        )
-        sq = dint.diagonal().astype(np.float64) / 1e12
-        num = dint.astype(np.float64) / 1e12
+        # exact pairwise scaled-long dots
+        dint = np_dot_scaled(e[:, None, :], e[None, :, :])
+        sq = np_unscale(dint.diagonal())
+        num = np_unscale(dint)
         den = np.sqrt(sq)[:, None] * np.sqrt(sq)[None, :]
         cos = num / den
         ia, ib = np.triu_indices(m, k=1)  # i < j over vec_id-sorted rows
@@ -1592,19 +1566,23 @@ def incr_build_state(old_docs: DataFrame, state: str) -> str:
 
     with ThreadPoolExecutor(max_workers=1) as pool:
         th_job = pool.submit(write_text_hashes)
-        _minhash_per_doc(old_docs).write.mode("overwrite").parquet(per_doc_path)
-        persisted = old_docs.sparkSession.read.parquet(per_doc_path)
-        old_bands = _per_doc_bands(persisted)
-        bsz_w = Window.partitionBy("band_id", "band_key")
-        old_bands_capped = (
-            old_bands.withColumn("_bsz", F.count(F.lit(1)).over(bsz_w))
-            .filter(F.col("_bsz") <= INCR_BAND_CAP)
-            .drop("_bsz")
-        )
-        old_bands_capped.write.mode("overwrite").parquet(
-            _os.path.join(state, "bands")
-        )
-        th_job.result()  # surface any failure; join before callers read state
+        try:
+            _minhash_per_doc(old_docs).write.mode("overwrite").parquet(per_doc_path)
+            persisted = old_docs.sparkSession.read.parquet(per_doc_path)
+            old_bands = _per_doc_bands(persisted)
+            bsz_w = Window.partitionBy("band_id", "band_key")
+            old_bands_capped = (
+                old_bands.withColumn("_bsz", F.count(F.lit(1)).over(bsz_w))
+                .filter(F.col("_bsz") <= INCR_BAND_CAP)
+                .drop("_bsz")
+            )
+            old_bands_capped.write.mode("overwrite").parquet(
+                _os.path.join(state, "bands")
+            )
+        finally:
+            # join before callers read state; a text_hashes failure is raised
+            # even when the chain failed too (chained onto the chain's error)
+            th_job.result()
     return state
 
 

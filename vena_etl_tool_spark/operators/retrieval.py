@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import spread_small
-from .similarity import dot_exact, with_sq_norm
+from .exact import dot_exact, duck_pair_dot, duck_sq_norm, with_sq_norm
 from .textanalysis import _BM25_CTES, BM25_TOP_K, text_bm25_search
 
 # Fixed literal query-id → query-vector mapping: the dense half of each
@@ -48,13 +48,11 @@ WITH {_BM25_CTES}, lex AS (
   VALUES {_QMAP_VALUES}
 ), norms AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {duck_sq_norm('embedding')} AS sq_norm
   FROM embeddings
 ), dense_scored AS (
   SELECT m.query_id, c.vec_id AS doc_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+         {duck_pair_dot('q.embedding', 'c.embedding')}
          / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) AS cosine
   FROM qmap m
   JOIN norms q ON q.vec_id = m.qvec
@@ -370,8 +368,7 @@ WITH {_BM25_CTES}, lex AS (
   VALUES {_QMAP_VALUES}
 ), ivf_scored AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {duck_sq_norm('embedding')} AS sq_norm,
          {{scores}} AS scores,
          list_transform(generate_series(1, {{n_cents}}),
                         i -> {{{{'s': scores[i], 'cid': i - 1}}}}) AS score_structs
@@ -389,8 +386,7 @@ WITH {_BM25_CTES}, lex AS (
                              ORDER BY u.s, u.cid) <= {{nprobe}}
 ), cand AS (
   SELECT p.query_id, c.vec_id AS doc_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE) * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(p.q_emb, c.embedding)) AS t(pp))
+         {duck_pair_dot('p.q_emb', 'c.embedding', 'pp')}
          / (SQRT(p.q_sq) * SQRT(c.sq_norm)) AS cosine
   FROM probes p JOIN ivf_assigned c ON c.cent = p.cent AND c.vec_id <> p.qvec
 ), dense AS (
@@ -451,16 +447,12 @@ def retrieval_rrf_fusion_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting build; fusion stays list-sized. This is the operator whose
     dense cost survives 100 TB (the occupancy rule: centroids ∝ corpus
     keeps cells bounded)."""
-    from .similarity import (
-        IVF_NPROBE,
-        _ivf_scores_spark,
-        with_sq_norm as _wsn,
-    )
+    from .similarity import IVF_NPROBE, _ivf_scores_spark
 
     lex = text_bm25_search(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rk").alias("l_rk")
     )
-    emb = _wsn(spread_small(load_table(spark, sf_dir, "embeddings")))
+    emb = with_sq_norm(spread_small(load_table(spark, sf_dir, "embeddings")))
     scored = emb.select(
         "vec_id", "embedding", "sq_norm",
         F.expr(_ivf_scores_spark()).alias("scores"),
@@ -663,13 +655,11 @@ WITH {_BM25_CTES}, lex AS (
   VALUES {_QMAP_VALUES}
 ), norms AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {duck_sq_norm('embedding')} AS sq_norm
   FROM embeddings
 ), dense_scored AS (
   SELECT m.query_id, c.vec_id AS doc_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+         {duck_pair_dot('q.embedding', 'c.embedding')}
          / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) AS cosine
   FROM qmap m
   JOIN norms q ON q.vec_id = m.qvec

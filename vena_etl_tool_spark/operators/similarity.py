@@ -26,6 +26,22 @@ from ..catalog import load_table
 from ..registry import register
 from ._shared import ckpt as _ckpt
 from ._shared import persisted_artifact, spread_small
+from .exact import (
+    dot_exact,
+    duck_pair_dot,
+    duck_plane_dot,
+    duck_plane_dot_list,
+    duck_sq_dot_list,
+    duck_sq_norm,
+    np_dot_scaled,
+    np_unscale,
+    py_sq_norm,
+    spark_plane_dot,
+    spark_sq_dot,
+    sql_unscale,
+    unscale,
+    with_sq_norm,
+)
 
 TOP_K = 5
 N_QUERIES = 20  # vec_id < 20 are the query vectors
@@ -38,46 +54,17 @@ _PLANES = np.random.default_rng(20240613).normal(
 ).astype(np.float64)
 
 
-def dot_exact(l: Column, r: Column) -> Column:  # noqa: E741
-    """Order-insensitive exact dot product of two float arrays.
-
-    Scaled-integer fold: each product is floored at 1e-12 granularity into
-    a LONG, so the sum is exact in any order and bit-identical to the
-    DuckDB oracle (`SUM(CAST(FLOOR(l*r*1e12) AS BIGINT))/1e12`) — same
-    determinism as a DECIMAL fold at ~3.4× less cost (long adds, no
-    BigDecimal). Overflow headroom: |term| ≤ ~2.5e13, 64 terms ≪ 2⁶³;
-    rescale the 1e12 factor for embeddings with larger magnitudes.
-    """
-    return (
-        F.aggregate(
-            F.zip_with(
-                l, r,
-                lambda x, y: F.floor(x.cast("double") * y.cast("double") * F.lit(1e12)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / F.lit(1e12)
-    )
-
-
-def with_sq_norm(emb: DataFrame) -> DataFrame:
-    return emb.withColumn("sq_norm", dot_exact(F.col("embedding"), F.col("embedding")))
-
-
 @register(
     "sim_cosine_topk",
     tags=("llm", "similarity", "topk"),
     oracle=f"""
 WITH norms AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {duck_sq_norm('embedding')} AS sq_norm
   FROM embeddings
 ), scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+         {duck_pair_dot('q.embedding', 'c.embedding')}
          / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) AS cosine
   FROM norms q JOIN norms c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
@@ -146,13 +133,7 @@ def lsh_bucket_cols() -> list[Column]:
     for band in range(LSH_BANDS):
         bits = []
         for bit in range(LSH_BITS):
-            plane = _PLANES[band, bit]
-            lits = ", ".join(f"{float(v)!r}D" for v in plane)
-            proj = (
-                f"aggregate(zip_with(embedding, array({lits}),"
-                f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-                f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-            )
+            proj = spark_plane_dot("embedding", _PLANES[band, bit])
             bits.append(f"CASE WHEN {proj} > 0 THEN {1 << bit} ELSE 0 END")
         cols.append(F.expr(" + ".join(bits)).alias(f"bucket{band}"))
     return cols
@@ -162,12 +143,7 @@ def _lsh_sql_bucket(band: int) -> str:
     """DuckDB twin of lsh_bucket_cols for one band (bit-identical)."""
     bits = []
     for bit in range(LSH_BITS):
-        lits = ", ".join(repr(float(v)) for v in _PLANES[band, bit])
-        sign = (
-            f"(SELECT SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            f" * struct_extract(p, 2) * 1e12) AS BIGINT))"
-            f" FROM UNNEST(list_zip(embedding, [{lits}])) AS t(p)) > 0"
-        )
+        sign = f"{duck_plane_dot('embedding', _PLANES[band, bit])} > 0"
         bits.append(f"CASE WHEN {sign} THEN {1 << bit} ELSE 0 END")
     return "(" + " + ".join(bits) + ")"
 
@@ -180,16 +156,11 @@ def _ann_lsh_oracle() -> str:
         f"  SELECT vec_id, {b} AS band, bucket{b} AS bucket FROM norms"
         for b in range(LSH_BANDS)
     )
-    dot_ab = (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        " FROM UNNEST(list_zip(na.embedding, nb.embedding)) AS t(p))"
-    )
+    dot_ab = duck_pair_dot("na.embedding", "nb.embedding")
     return f"""
 WITH norms AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {duck_sq_norm('embedding')} AS sq_norm,
          {buckets}
   FROM embeddings
 ), flat AS (
@@ -372,16 +343,14 @@ _IVF_RAW = np.random.default_rng(20240614).normal(size=(IVF_CENTROIDS, 64))
 _IVF_CENTS = (_IVF_RAW / np.linalg.norm(_IVF_RAW, axis=1, keepdims=True)).astype(
     np.float64
 )
-# Python-computed integer literal per centroid: sum(floor(c*c*1e12)).
+# Python-computed scaled integer literal |c|² per centroid.
 # Embedded identically in both engines' SQL — no cross-engine float risk.
-_IVF_C_SQ = [
-    int(sum(math.floor(float(c) * float(c) * 1e12) for c in row)) for row in _IVF_CENTS
-]
+_IVF_C_SQ = [py_sq_norm(row) for row in _IVF_CENTS]
 
 
 def _ivf_scores_spark() -> str:
     """Spark SQL for the 16-element BIGINT score array: element i is
-    |cᵢ|²−2⟨x,cᵢ⟩ (scaled 1e12) — argmin over i is the nearest-centroid
+    |cᵢ|²−2⟨x,cᵢ⟩ (scaled int64) — argmin over i is the nearest-centroid
     assignment (the |x|² term is constant per row and cancels). ONE array
     column, computed once; consumers argmin/explode the array instead of
     re-referencing 16 fold expressions (which Catalyst's project-collapse
@@ -389,12 +358,7 @@ def _ivf_scores_spark() -> str:
     explosion that takes minutes to optimize)."""
     elems = []
     for i in range(IVF_CENTROIDS):
-        lits = ", ".join(f"{float(v)!r}D" for v in _IVF_CENTS[i])
-        dot = (
-            f"aggregate(zip_with(embedding, array({lits}),"
-            f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
+        dot = spark_plane_dot("embedding", _IVF_CENTS[i])
         elems.append(f"CAST({_IVF_C_SQ[i]} AS BIGINT) - 2 * ({dot})")
     return "array(" + ", ".join(elems) + ")"
 
@@ -402,12 +366,7 @@ def _ivf_scores_spark() -> str:
 def _ivf_scores_duck() -> str:
     elems = []
     for i in range(IVF_CENTROIDS):
-        lits = ", ".join(f"{float(v)!r}" for v in _IVF_CENTS[i])
-        dot = (
-            f"CAST(list_sum(list_transform(list_zip(embedding, [{lits}]),"
-            f" p -> CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            f" * struct_extract(p, 2) * 1e12) AS BIGINT))) AS BIGINT)"
-        )
+        dot = duck_plane_dot_list("embedding", _IVF_CENTS[i])
         elems.append(f"CAST({_IVF_C_SQ[i]} AS BIGINT) - 2 * {dot}")
     return "[" + ", ".join(elems) + "]"
 
@@ -415,8 +374,7 @@ def _ivf_scores_duck() -> str:
 _IVF_ORACLE = f"""
 WITH scored AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {duck_sq_norm('embedding')} AS sq_norm,
          {_ivf_scores_duck()} AS scores,
          list_transform(generate_series(1, {IVF_CENTROIDS}),
                         i -> {{'s': scores[i], 'cid': i - 1}}) AS score_structs
@@ -435,8 +393,7 @@ WITH scored AS (
   ) WHERE prn <= {IVF_NPROBE}
 ), cand AS (
   SELECT p.query_id, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE) * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(p.q_emb, c.embedding)) AS t(pp))
+         {duck_pair_dot('p.q_emb', 'c.embedding', 'pp')}
          / (SQRT(p.q_sq) * SQRT(c.sq_norm)) AS cosine
   FROM probes p JOIN assigned c ON c.cent = p.cent AND c.vec_id <> p.query_id
 )
@@ -626,8 +583,7 @@ SEM_CLUSTER_CAP = 500
 _SEMANTIC_ORACLE = f"""
 WITH scored AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {duck_sq_norm('embedding')} AS sq_norm,
          {{duck_scores}} AS scores
   FROM embeddings
 ), assigned AS (
@@ -642,8 +598,7 @@ WITH scored AS (
 ), close AS (
   SELECT b.vec_id AS b_id, a.vec_id AS a_id
   FROM small a JOIN small b ON a.cent = b.cent AND a.vec_id < b.vec_id
-  WHERE (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-         FROM UNNEST(list_zip(a.embedding, b.embedding)) AS t(p))
+  WHERE {duck_pair_dot('a.embedding', 'b.embedding')}
         / (SQRT(a.sq_norm) * SQRT(b.sq_norm)) >= {SEM_TAU}
 ), dup AS (
   SELECT b_id, MIN(a_id) AS dup_of, COUNT(*) AS n_close FROM close GROUP BY b_id
@@ -753,31 +708,23 @@ _PQ_RAW = np.random.default_rng(20250814).normal(
     0.0, 0.15, size=(PQ_SUBSPACES, PQ_CODES, PQ_SUBDIM)
 )
 _PQ_BOOKS = _PQ_RAW.astype(np.float64)
-# per (subspace, code): sum(floor(c*c*1e12)) as a Python int literal,
+# per (subspace, code): scaled |c|² as a Python int literal,
 # embedded identically in both engines' SQL
 _PQ_C_SQ = [
-    [
-        int(sum(math.floor(float(c) * float(c) * 1e12) for c in _PQ_BOOKS[s][k]))
-        for k in range(PQ_CODES)
-    ]
+    [py_sq_norm(_PQ_BOOKS[s][k]) for k in range(PQ_CODES)]
     for s in range(PQ_SUBSPACES)
 ]
 
 
 def _pq_scores_spark(s: int, src: str = "embedding") -> str:
     """BIGINT score array for subspace ``s``: |c_k|^2 - 2<x_s, c_k>
-    (scaled 1e12); argmin over k = the PQ code. x_s = slice(src,
+    (scaled int64); argmin over k = the PQ code. x_s = slice(src,
     s*8+1, 8). ``src`` parameterizes the vector being encoded — the raw
     embedding for plain PQ, the cell residual for IVFADC."""
     sub = f"slice({src}, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})"
     elems = []
     for k in range(PQ_CODES):
-        lits = ", ".join(f"{float(v)!r}D" for v in _PQ_BOOKS[s][k])
-        dot = (
-            f"aggregate(zip_with({sub}, array({lits}),"
-            f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
+        dot = spark_plane_dot(sub, _PQ_BOOKS[s][k])
         elems.append(f"CAST({_PQ_C_SQ[s][k]} AS BIGINT) - 2 * ({dot})")
     return "array(" + ", ".join(elems) + ")"
 
@@ -786,12 +733,7 @@ def _pq_scores_duck(s: int, src: str = "embedding") -> str:
     sub = f"{src}[{s * PQ_SUBDIM + 1}:{s * PQ_SUBDIM + PQ_SUBDIM}]"
     elems = []
     for k in range(PQ_CODES):
-        lits = ", ".join(repr(float(v)) for v in _PQ_BOOKS[s][k])
-        dot = (
-            f"CAST(list_sum(list_transform(list_zip({sub}, [{lits}]),"
-            f" p -> CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            f" * struct_extract(p, 2) * 1e12) AS BIGINT))) AS BIGINT)"
-        )
+        dot = duck_plane_dot_list(sub, _PQ_BOOKS[s][k])
         elems.append(f"CAST({_PQ_C_SQ[s][k]} AS BIGINT) - 2 * {dot}")
     return "[" + ", ".join(elems) + "]"
 
@@ -806,11 +748,8 @@ def _pq_oracle() -> str:
     )
     # scaled residual per subspace: |x_s|^2 + min_score  (= |x_s - c|^2
     # scaled, since min_score = |c|^2 - 2<x_s,c>)
-    sub_sq = lambda s: (  # noqa: E731 — local SQL fragment helper
-        f"(SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE)"
-        f" * 1e12) AS BIGINT)) AS BIGINT)"
-        f" FROM UNNEST(embedding[{s * PQ_SUBDIM + 1}:{s * PQ_SUBDIM + PQ_SUBDIM}])"
-        f" AS u(x))"
+    sub_sq = lambda s: duck_sq_norm(  # noqa: E731 — local SQL fragment helper
+        f"embedding[{s * PQ_SUBDIM + 1}:{s * PQ_SUBDIM + PQ_SUBDIM}]", scaled=True
     )
     err_sum = " + ".join(
         f"({sub_sq(s)} + list_min(sc{s}))" for s in range(PQ_SUBSPACES)
@@ -822,7 +761,7 @@ WITH scored AS (
   FROM embeddings
 )
 SELECT vec_id, label, {code_cols},
-       ROUND(CAST(({err_sum}) AS DOUBLE) / 1e12, 6) AS recon_err_sq
+       ROUND({sql_unscale(f"({err_sum})")}, 6) AS recon_err_sq
 FROM scored
 """
 
@@ -853,10 +792,8 @@ def embedding_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         *[F.expr(_pq_scores_spark(s)).alias(f"sc{s}") for s in range(PQ_SUBSPACES)],
     )
-    sub_sq = lambda s: (  # noqa: E731 — local SQL fragment helper
-        f"aggregate(transform(slice(embedding, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM}),"
-        f" x -> CAST(FLOOR(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e12) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    sub_sq = lambda s: spark_sq_dot(  # noqa: E731 — local SQL fragment helper
+        f"slice(embedding, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})"
     )
     err_sum = " + ".join(
         f"({sub_sq(s)} + array_min(sc{s}))" for s in range(PQ_SUBSPACES)
@@ -870,7 +807,7 @@ def embedding_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(f"code{s}")
             for s in range(PQ_SUBSPACES)
         ],
-        F.round(F.expr(f"CAST(({err_sum}) AS DOUBLE) / 1e12"), 6).alias(
+        F.round(F.expr(sql_unscale(f"({err_sum})")), 6).alias(
             "recon_err_sq"
         ),
     )
@@ -1053,11 +990,7 @@ KNN_GRAPH_K = 4
 
 
 def _knn_pair_dot_duck() -> str:
-    return (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE)"
-        " * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        " FROM UNNEST(list_zip(a.embedding, b.embedding)) AS t(pp))"
-    )
+    return duck_pair_dot("a.embedding", "b.embedding", "pp")
 
 
 # CTE body shared by the graph and cluster oracles (formatted with
@@ -1067,8 +1000,7 @@ _KNN_GRAPH_CTES = f"""reps AS (
   SELECT embedding, MIN(vec_id) AS vec_id FROM embeddings GROUP BY embedding
 ), scored AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {duck_sq_norm('embedding')} AS sq_norm,
          {{scores}} AS scores
   FROM reps
 ), assigned AS (
@@ -1353,14 +1285,8 @@ def _residual_duck(vec: str, cent: str) -> str:
     )
 
 
-_TERM0_SPARK = (
-    "aggregate(transform(q_res, r -> CAST(FLOOR(r * r * 1e12) AS BIGINT)),"
-    " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
-_TERM0_DUCK = (
-    "CAST(list_sum(list_transform(q_res,"
-    " r -> CAST(FLOOR(r * r * 1e12) AS BIGINT))) AS BIGINT)"
-)
+_TERM0_SPARK = spark_sq_dot("q_res", "r", cast=False)
+_TERM0_DUCK = duck_sq_dot_list("q_res")
 
 
 def _ivfadc_oracle() -> str:
@@ -1615,27 +1541,9 @@ _RP_RAW = np.random.default_rng(20260814).normal(size=(RP_DIM, 64))
 _RP_MAT = (_RP_RAW / math.sqrt(RP_DIM)).astype(np.float64)
 
 
-def _rp_dot_spark(j: int, src: str = "embedding") -> str:
-    lits = ", ".join(f"{float(v)!r}D" for v in _RP_MAT[j])
-    return (
-        f"aggregate(zip_with({src}, array({lits}),"
-        f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-
-
-def _rp_dot_duck(j: int, src: str = "embedding") -> str:
-    lits = ", ".join(repr(float(v)) for v in _RP_MAT[j])
-    return (
-        f"CAST(list_sum(list_transform(list_zip({src}, [{lits}]),"
-        f" p -> CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        f" * struct_extract(p, 2) * 1e12) AS BIGINT))) AS BIGINT)"
-    )
-
-
 _RP_ORACLE = f"""
 SELECT vec_id, label,
-       {", ".join(f"ROUND(CAST({_rp_dot_duck(j)} AS DOUBLE) / 1e12, 6) AS p{j}" for j in range(RP_DIM))}
+       {", ".join(f"ROUND({sql_unscale(duck_plane_dot_list('embedding', p))}, 6) AS p{j}" for j, p in enumerate(_RP_MAT))}
 FROM embeddings
 """
 
@@ -1658,17 +1566,16 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         *[
-            F.round(
-                F.expr(_rp_dot_spark(j)).cast("double") / F.lit(1e12), 6
-            ).alias(f"p{j}")
-            for j in range(RP_DIM)
+            F.round(unscale(F.expr(spark_plane_dot("embedding", p))), 6).alias(f"p{j}")
+            for j, p in enumerate(_RP_MAT)
         ],
     )
 
 
 def _rp_audit_pairs_duck() -> str:
     proj_cols = ",\n         ".join(
-        f"CAST({_rp_dot_duck(j)} AS DOUBLE) / 1e12 AS y{j}" for j in range(RP_DIM)
+        f"{sql_unscale(duck_plane_dot_list('embedding', p))} AS y{j}"
+        for j, p in enumerate(_RP_MAT)
     )
     d2_proj = " + ".join(
         f"CAST(FLOOR((a.y{j} - b.y{j}) * (a.y{j} - b.y{j}) * 1e9) AS BIGINT)"
@@ -1716,8 +1623,8 @@ def embedding_rp_distance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         *[
-            (F.expr(_rp_dot_spark(j)).cast("double") / F.lit(1e12)).alias(f"y{j}")
-            for j in range(RP_DIM)
+            unscale(F.expr(spark_plane_dot("embedding", p))).alias(f"y{j}")
+            for j, p in enumerate(_RP_MAT)
         ],
     )
     a = proj.select(
@@ -2138,8 +2045,7 @@ SWEEP_LEVELS = (1, 2, 4, 8)  # nprobe levels; IVF_NPROBE=2 is the prod point
 _SWEEP_ORACLE = f"""
 WITH scored AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {duck_sq_norm('embedding')} AS sq_norm,
          {_ivf_scores_duck()} AS scores,
          list_transform(generate_series(1, {IVF_CENTROIDS}),
                         i -> {{'s': scores[i], 'cid': i - 1}}) AS score_structs
@@ -2161,8 +2067,7 @@ WITH scored AS (
   VALUES {", ".join(f"({v})" for v in SWEEP_LEVELS)}
 ), cand AS (
   SELECT l.nprobe, p.query_id, c.vec_id AS neighbor_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE) * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(p.q_emb, c.embedding)) AS t(pp))
+         {duck_pair_dot('p.q_emb', 'c.embedding', 'pp')}
          / (SQRT(p.q_sq) * SQRT(c.sq_norm)) AS cosine
   FROM levels l
   JOIN probes p ON p.prn <= l.nprobe
@@ -2178,8 +2083,7 @@ WITH scored AS (
   FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-             (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-              FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+             {duck_pair_dot('q.embedding', 'c.embedding')}
              / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) DESC, c.vec_id) AS rk
     FROM scored q JOIN scored c ON c.vec_id <> q.vec_id
     WHERE q.vec_id < {N_QUERIES}
@@ -2724,11 +2628,7 @@ WALK_HOPS = 4
 
 
 def _walk_cos_duck(q: str, s: str) -> str:
-    dot = (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(wp, 1) AS DOUBLE)"
-        " * CAST(struct_extract(wp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        f" FROM UNNEST(list_zip({q}.embedding, {s}.embedding)) AS t(wp))"
-    )
+    dot = duck_pair_dot(f"{q}.embedding", f"{s}.embedding", "wp")
     return f"{dot} / (SQRT({q}.sq_norm) * SQRT({s}.sq_norm))"
 
 
@@ -2761,8 +2661,7 @@ WITH {_KNN_GRAPH_CTES}, bidir AS (
   SELECT MIN(src) AS node FROM bidir
 ), qv AS (
   SELECT vec_id AS query_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {duck_sq_norm('embedding')} AS sq_norm
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ), walk0 AS (
   SELECT q.query_id, e.node AS cur FROM qv q, entry e
@@ -2992,45 +2891,28 @@ MAXSIM_SUBV = 4  # sub-vectors per embedding (64 dims -> 4 x 16)
 MAXSIM_DIM = 16
 
 
-def _np_dot_floor(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
-    """Row-wise dot_exact over (n, MAXSIM_DIM) float64 blocks — bit-identical
-    to the SQL fold: (x*y)*1e12 elementwise left-assoc in float64, floor
-    (|terms| ≤ ~2.5e13 < 2^53 so floor and the int64 cast are exact), int64
-    row-sum (exact in any order), cast back (≤ 16·2.5e13 < 2^53, exactly
-    representable), divide by 1e12."""
-    return (
-        np.floor((a * b) * 1e12).astype(np.int64).sum(axis=1).astype(np.float64)
-        / 1e12
-    )
-
-
 def _maxsim_np_score(q: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
     """MaxSim score per row pair, (n, 64) × (n, 64) → (n,) float64:
     Σ_qi max_cj dot(q_qi, c_cj) / (|q_qi|·|c_cj|). Every step mirrors the
-    JVM/DuckDB expression bit for bit: dot_exact via _np_dot_floor, IEEE
+    JVM/DuckDB expression bit for bit: dot_exact via np_dot_scaled, IEEE
     sqrt for the norms, division in the same (dot / (qn * cn)) shape,
     GREATEST = plain max (associative and exact for the finite scores
     these norms produce; no zero-norm sub-vector exists — embeddings are
     dense random doubles, and the oracle hash gate would catch a NaN
     divergence), and the qi-sum accumulated LEFT-ASSOCIATED in index
     order, never np.sum (pairwise summation would re-associate floats)."""
-    c_norms = [
-        np.sqrt(
-            _np_dot_floor(
-                c[:, cj * MAXSIM_DIM : (cj + 1) * MAXSIM_DIM],
-                c[:, cj * MAXSIM_DIM : (cj + 1) * MAXSIM_DIM],
-            )
-        )
-        for cj in range(MAXSIM_SUBV)
-    ]
+    def dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
+        return np_unscale(np_dot_scaled(a, b))
+
+    c_subs = [c[:, cj * MAXSIM_DIM : (cj + 1) * MAXSIM_DIM] for cj in range(MAXSIM_SUBV)]
+    c_norms = [np.sqrt(dot(cs, cs)) for cs in c_subs]
     score = None
     for qi in range(MAXSIM_SUBV):
         qs = q[:, qi * MAXSIM_DIM : (qi + 1) * MAXSIM_DIM]
-        qn = np.sqrt(_np_dot_floor(qs, qs))
+        qn = np.sqrt(dot(qs, qs))
         best = None
-        for cj in range(MAXSIM_SUBV):
-            cs = c[:, cj * MAXSIM_DIM : (cj + 1) * MAXSIM_DIM]
-            cos = _np_dot_floor(qs, cs) / (qn * c_norms[cj])
+        for cs, cn in zip(c_subs, c_norms):
+            cos = dot(qs, cs) / (qn * cn)
             best = cos if best is None else np.maximum(best, cos)
         score = best if score is None else score + best
     return score
@@ -3056,22 +2938,15 @@ def _maxsim_kernel_udf():
 
 
 def _maxsim_duck() -> str:
-    def dot(l: str, r: str) -> str:
-        return (
-            "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-            f" FROM UNNEST(list_zip({l}, {r})) AS t(p))"
-        )
-
     subs = []
     for s in range(MAXSIM_SUBV):
         lo, hi = s * MAXSIM_DIM + 1, (s + 1) * MAXSIM_DIM
         sv = f"embedding[{lo}:{hi}]"
-        subs.append(f"{sv} AS s{s}, SQRT({dot(sv, sv)}) AS n{s}")
+        subs.append(f"{sv} AS s{s}, SQRT({duck_pair_dot(sv, sv)}) AS n{s}")
     maxes = []
     for qi in range(MAXSIM_SUBV):
         cos = [
-            f"({dot(f'q.s{qi}', f'c.s{cj}')} / (q.n{qi} * c.n{cj}))"
+            f"({duck_pair_dot(f'q.s{qi}', f'c.s{cj}')} / (q.n{qi} * c.n{cj}))"
             for cj in range(MAXSIM_SUBV)
         ]
         maxes.append("GREATEST(" + ", ".join(cos) + ")")
@@ -3152,22 +3027,15 @@ def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _maxsim_plaid_duck() -> str:
-    def dot(l: str, r: str) -> str:
-        return (
-            "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-            f" FROM UNNEST(list_zip({l}, {r})) AS t(p))"
-        )
-
     subs = []
     for s in range(MAXSIM_SUBV):
         lo, hi = s * MAXSIM_DIM + 1, (s + 1) * MAXSIM_DIM
         sv = f"embedding[{lo}:{hi}]"
-        subs.append(f"{sv} AS s{s}, SQRT({dot(sv, sv)}) AS n{s}")
+        subs.append(f"{sv} AS s{s}, SQRT({duck_pair_dot(sv, sv)}) AS n{s}")
     maxes = []
     for qi in range(MAXSIM_SUBV):
         cos = [
-            f"({dot(f'q.s{qi}', f'c.s{cj}')} / (q.n{qi} * c.n{cj}))"
+            f"({duck_pair_dot(f'q.s{qi}', f'c.s{cj}')} / (q.n{qi} * c.n{cj}))"
             for cj in range(MAXSIM_SUBV)
         ]
         maxes.append("GREATEST(" + ", ".join(cos) + ")")
@@ -3926,8 +3794,7 @@ WITH {{ctes}}, l1nodes AS (
   SELECT MIN(vec_id) AS node FROM l1nodes
 ), qv AS (
   SELECT vec_id AS query_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {duck_sq_norm('embedding')} AS sq_norm
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ), w1_0 AS (
   SELECT q.query_id, e.node AS cur FROM qv q, l1entry e

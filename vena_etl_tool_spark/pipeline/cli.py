@@ -85,10 +85,13 @@ def cmd_upload(
     started = time.time()
     result = ingest_csv(spark, path, spec)
     target = f"{audit.log_dir}/../{spec.target}" if spec.target else "loaded"
-    handle = jobs.submit_batch(
-        lambda: write_table(result.good, target), description=f"upload {v.file_name}"
-    )
-    jobs.wait(handle.job_id)
+    try:
+        handle = jobs.submit_batch(
+            lambda: write_table(result.good, target), description=f"upload {v.file_name}"
+        )
+        jobs.wait(handle.job_id)
+    finally:
+        result.scan.unpersist(blocking=True)
     if cfg.api_url:
         # Reference wire format: POST the raw CSV as multipart/form-data
         # field `file` with contentType text/csv to the template's

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 from .spec import PipelineSpec
 
 CORRUPT_COL = "_corrupt_record"
+SOURCE_COL = "_source_file"
 
 
 @dataclass
@@ -55,6 +56,7 @@ class IngestResult:
     quarantine: DataFrame
     n_good: int
     n_quarantined: int
+    scan: DataFrame  # the cached scan behind good/quarantine; owner unpersists
 
 
 def ingest_csv(spark: SparkSession, path: str, spec: PipelineSpec) -> IngestResult:
@@ -62,7 +64,12 @@ def ingest_csv(spark: SparkSession, path: str, spec: PipelineSpec) -> IngestResu
 
     Parse failures don't kill the load (the reference proceeds blindly; we
     proceed *accountably*): rows that fail the schema land in the
-    quarantine frame with their raw text preserved for replay.
+    quarantine frame with their raw text and source file preserved for
+    replay. The scan is cached (Spark rejects a query that reads only the
+    corrupt-record column of an uncached scan); the cache is keyed by plan,
+    not file contents, so the caller must ``unpersist`` ``result.scan`` or a
+    later ingest of the same path is served the old rows. The file name is
+    taken below the cache: ``input_file_name()`` above it evaluates to ''.
     """
     schema_with_corrupt = T.StructType(
         list(spec.schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
@@ -73,14 +80,19 @@ def ingest_csv(spark: SparkSession, path: str, spec: PipelineSpec) -> IngestResu
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .schema(schema_with_corrupt)
         .csv(path)
+        # only quarantined rows carry it, so good rows cache no extra bytes
+        .withColumn(
+            SOURCE_COL,
+            F.when(F.col(CORRUPT_COL).isNotNull(), F.input_file_name()),
+        )
     ).cache()
-    good = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    good = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL, SOURCE_COL)
     if spec.column_mapping:
         for src, dst in spec.column_mapping.items():
             good = good.withColumnRenamed(src, dst)
     quarantine = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_record"),
-        F.input_file_name().alias("source_file"),
+        F.col(SOURCE_COL).alias("source_file"),
     )
     # one action for both counts (a single scan materializes the cache);
     # count(col) counts non-nulls, so corrupt rows are exactly its value
@@ -93,6 +105,7 @@ def ingest_csv(spark: SparkSession, path: str, spec: PipelineSpec) -> IngestResu
         quarantine=quarantine,
         n_good=counts.n_total - counts.n_bad,
         n_quarantined=counts.n_bad,
+        scan=raw,
     )
 
 
